@@ -23,13 +23,6 @@ from ..functions import vectors as VEC
 # exact dedup
 # ---------------------------------------------------------------------------
 
-def exact_dedup(df: DataFrame, keys: Sequence[str]) -> DataFrame:
-    """Exact duplicate removal on key columns — hash-shuffle dedup
-    (dropDuplicates). Which survivor is kept is partition-order
-    dependent; use ``lastwin_dedup`` when the survivor matters."""
-    return df.dropDuplicates(list(keys))
-
-
 def content_dedup(
     df: DataFrame, text_col: str = "text", id_col: str | None = None
 ) -> DataFrame:
@@ -172,22 +165,6 @@ def minhash_sig_array(
                 ]
             ),
         ).alias("sig"),
-    )
-
-
-def minhash_signatures(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 32,
-    shingle_n: int = 5,
-) -> DataFrame:
-    """Column-per-slot view of ``minhash_sig_array`` (m0..m{k-1}) for
-    callers that want flat slots; the hot paths stay on the array
-    form."""
-    sig = minhash_sig_array(df, id_col, text_col, num_hashes, shingle_n)
-    return sig.select(
-        "id", *[F.get("sig", i).alias(f"m{i}") for i in range(num_hashes)]
     )
 
 
@@ -1384,31 +1361,19 @@ def embedding_near_dup_pairs(
 
         n = df.count()
         planes = max(4, min(16, math.ceil(math.log2(max(n, 2) / 64))))
-    hyperplanes = _deterministic_planes(planes, dim)
-    from .vectorized import bucket_norm_pandas
+    from .similarity import _bucket_norm_side, _probe_buckets
 
     # r15: fused bucket+norm kernel — the per-vector norm rides the
     # same Arrow pass as the bucket (bit-identical left fold, see
     # bucket_norm_pandas) instead of a dim-unrolled codegen fold
-    # projected next to the kernel.
-    bn = bucket_norm_pandas(hyperplanes, planes, tables=1)
-    # finite-geometry scope (r13 non-finite components class): the
-    # masking kernel emits a NULL base bucket for corrupt vectors —
-    # dropped here, before probes or anchors shuffle
+    # projected next to the kernel. The side's NULL-bucket scope drops
+    # corrupt vectors (r13 non-finite components class) before probes
+    # or anchors shuffle.
     base = (
-        df.where(F.col(vec_col).isNotNull())
-        .select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).alias("v"),
+        _bucket_norm_side(
+            df, id_col, vec_col, ("id", "v", "nrm", "b0"),
+            _deterministic_planes(planes, dim), planes, 1,
         )
-        .withColumn("__bn", bn(F.col("v")))
-        .select(
-            "id",
-            "v",
-            F.col("__bn").getField("nrm").alias("nrm"),
-            F.element_at(F.col("__bn").getField("bs"), 1).alias("b0"),
-        )
-        .where(F.col("b0").isNotNull())
         # r15: pin — base feeds TWO consumers (probe explode + anchor
         # side) and the bucket+norm kernel otherwise runs twice over
         # the corpus (the kernel-once discipline; ArrowEvalPython
@@ -1420,18 +1385,8 @@ def embedding_near_dup_pairs(
         # incremental_dedup's fingerprint pin.
         .localCheckpoint(eager=False)
     )
-    probes = [F.col("b0")] + [
-        F.col("b0").bitwiseXOR(F.lit(1 << i)) for i in range(planes)
-    ]
-    if probe_radius >= 2:
-        probes += [
-            F.col("b0").bitwiseXOR(F.lit((1 << i) | (1 << j)))
-            for i in range(planes)
-            for j in range(i)
-        ]
-    probed = base.select(
-        "id", "v", "nrm", F.explode(F.array(*probes)).alias("bucket")
-    )
+    probes = _probe_buckets(F.col("b0"), planes, probe_radius)
+    probed = base.select("id", "v", "nrm", F.explode(F.array(*probes)).alias("bucket"))
     anchors = base.select(
         F.col("id").alias("b_id"),
         F.col("v").alias("b_v"),

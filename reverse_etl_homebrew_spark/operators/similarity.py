@@ -26,6 +26,56 @@ from ..functions.exactmath import guard_dec_units, round6_dec6_over_int
 from .dedup import _deterministic_planes
 
 
+def _bucket_norm_side(df, id_col, vec_col, out, planes_flat, planes, tables):
+    """One side of every bucketed vector path: ``df``'s non-NULL
+    vectors through the fused bucket+norm kernel
+    (vectorized.bucket_norm_pandas), projected to the ``out`` =
+    (id, vector, norm, bucket) column names. ``tables`` > 1 fans a row
+    out to one row per table bucket.
+
+    The NULL-bucket filter IS the finite-geometry scope (r13
+    non-finite components class): the masking kernel gives corrupt
+    vectors a NULL bucket, and a filter on the kernel's output is an
+    attribute-barrier form Catalyst cannot push back into a duplicated
+    dim-term fold (measured free; an input-side fold filter measured
+    1.2-2.3× on the bucketed keys). It sits above the kernel
+    projection, so the kernel runs once per side (kernel-once mark).
+    Dropping corrupt rows here also keeps them out of every probe
+    explode and shuffle."""
+    from .vectorized import bucket_norm_pandas
+
+    id_o, v_o, nrm_o, b_o = out
+    bn = bucket_norm_pandas(planes_flat, planes, tables)
+    bs = F.col("__bn").getField("bs")
+    return (
+        df.where(F.col(vec_col).isNotNull())
+        .select(F.col(id_col).alias(id_o), F.col(vec_col).alias(v_o))
+        .withColumn("__bn", bn(F.col(v_o)))
+        .select(
+            id_o,
+            v_o,
+            F.col("__bn").getField("nrm").alias(nrm_o),
+            (F.explode(bs) if tables > 1 else F.element_at(bs, 1)).alias(b_o),
+        )
+        .where(F.col(b_o).isNotNull())
+    )
+
+
+def _probe_buckets(b, planes: int, radius: int) -> list:
+    """Multi-probe list for base bucket ``b`` (a Column or an int):
+    ``b`` itself, then its 1-bit flips (``radius`` >= 1), then its
+    2-bit flips (``radius`` >= 2) — 1 + p + p(p-1)/2 buckets of 2^p.
+    Flips touch bits < ``planes`` only, so a multi-table tag survives.
+    The probes of one base are pairwise distinct (XOR with distinct
+    masks), so a vector matches an indexed row on at most one probe."""
+    masks = [1 << i for i in range(planes)] if radius >= 1 else []
+    if radius >= 2:
+        masks += [(1 << i) | (1 << j) for i in range(planes) for j in range(i)]
+    if isinstance(b, int):
+        return [b] + [b ^ m for m in masks]
+    return [b] + [b.bitwiseXOR(F.lit(m)) for m in masks]
+
+
 def topk_brute(
     df: DataFrame,
     query: Sequence[float],
@@ -82,7 +132,7 @@ def topk_brute(
         # janino's 64 KB method limit at dim 64 (the stage ran
         # interpreted, measured 8.8 s → 3.9 s once fixed); the r14 fix
         # kept ONE codegen fold (the query dot) next to a
-        # norm_fold_pandas kernel + scalar filter. r15 fuses the
+        # per-row norm kernel + scalar filter. r15 fuses the
         # remaining fold INTO the kernel (query_cosine_flags_pandas):
         # same kernel count, one fewer per-element JVM pass, and the
         # dim-unrolled tree leaves the plan entirely. Scores are
@@ -134,7 +184,7 @@ def topk_lsh(
     1-bit-flip probes.
 
     The data-side bucket is computed by the Arrow matmul bucketer
-    (operators/vectorized.table_buckets_pandas), not the flat codegen
+    (operators/vectorized.bucket_norm_pandas), not the flat codegen
     sign fold: Catalyst pushes the probe filter through the bucket
     projection, and an IN-filter carrying two inlined copies of a
     planes×dim fold (the In check + the pushed isnotnull) overflows
@@ -152,34 +202,20 @@ def topk_lsh(
             for i, p in enumerate(hp)
         )
 
-    qb = bucket_of([float(x) for x in query])
     # multi-probe to Hamming radius 2: recall on near-orthogonal
     # neighbor sets stays useful while still scanning only
     # (1 + p + p(p-1)/2) of 2^p buckets
-    probe_buckets = (
-        [qb]
-        + [qb ^ (1 << i) for i in range(planes)]
-        + [qb ^ (1 << i) ^ (1 << j) for i in range(planes) for j in range(i)]
-    )
-    from .vectorized import bucket_norm_pandas
-
-    bn = bucket_norm_pandas(hp, planes, tables=1)
-    cand = (
-        # the masking kernel gives corrupt vectors a NULL bucket,
-        # which isin() drops — the finite-geometry scope for free;
-        # pre_scoped tells topk_brute NOT to re-scope (the redundant
-        # second fold pushed the candidate stage past janino's 64 KB
-        # method limit and the probe filter ran interpreted — r14).
-        # r15: the kernel is the FUSED bucket+norm pass, and the norm
-        # rides into scoring (norm_col) so the candidate stage keeps
-        # one dim fold (the query dot) instead of cosine_literal's two
-        # norm inlines — same doubles, same NULL semantics.
-        df.where(F.col(vec_col).isNotNull())
-        .withColumn("__bn", bn(F.col(vec_col)))
-        .withColumn("__bucket", F.element_at(F.col("__bn").getField("bs"), 1))
-        .withColumn("__nrm", F.col("__bn").getField("nrm"))
-        .filter(F.col("__bucket").isin(probe_buckets))
-    )
+    probe_buckets = _probe_buckets(bucket_of([float(x) for x in query]), planes, 2)
+    # pre_scoped tells topk_brute NOT to re-scope (the side's NULL-bucket
+    # filter already did; the redundant second fold pushed the candidate
+    # stage past janino's 64 KB method limit and the probe filter ran
+    # interpreted — r14). r15: the norm rides into scoring (norm_col)
+    # so the candidate stage keeps one dim fold (the query dot) instead
+    # of cosine_literal's two norm inlines — same doubles, same NULL
+    # semantics.
+    cand = _bucket_norm_side(
+        df, id_col, vec_col, (id_col, vec_col, "__nrm", "__bucket"), hp, planes, 1
+    ).filter(F.col("__bucket").isin(probe_buckets))
     return topk_brute(
         cand, query, k, id_col, vec_col, pre_scoped=True, norm_col="__nrm"
     )
@@ -241,50 +277,24 @@ def knn_join(
     if planes is None and not exact:
         n_right = right.count()
         planes = min(16, max(6, math.ceil(math.log2(max(n_right, 1) / 64 + 1))))
-    # norms computed once per vector, not once per candidate pair —
-    # bit-identical score (see VEC.cosine_with_norms) — and, r15,
-    # computed INSIDE the bucketer kernel (bucket_norm_pandas): the
-    # vectors cross the Arrow boundary for the buckets anyway, so the
-    # norm there is one extra vectorized fold over bytes already in
-    # cache, where the old codegen fold re-built a dim-unrolled
-    # expression tree per side per query (driver plan-size cost) and
-    # paid a second element-wise pass in the JVM. Finite-geometry
-    # scope (r13 non-finite components class) is branch-specific: the
-    # bucketed branches inherit it from the MASKING kernel (corrupt
-    # rows get a NULL bucket, which no equi-join can match — an
-    # attribute-barrier form Catalyst cannot push back into a
-    # duplicated fold; measured free); the exact branch, which has no
-    # bucketer, gets it from the fused pair kernel's ``ok`` flag.
-    # Pair scoring in the Arrow kernel (explicit left fold — the same
-    # doubles as VEC.cosine_with_norms and the SQL oracles): candidate
-    # volume is pairs-per-bucket × probes, and the dim-unrolled codegen
-    # fold on that stage ran un-JIT'd (same finding as
-    # embedding_near_dup_pairs; see pair_cosine_pandas).
-    from .vectorized import pair_cosine_pandas
-
-    _cos = pair_cosine_pandas()
-    score_expr = F.round(
-        _cos(F.col("l_v"), F.col("r_v"), F.col("l_nrm"), F.col("r_nrm")), 6
-    )
-
-    def _side(df_, id_in, id_out, v_out):
-        return df_.where(F.col(vec_col).isNotNull()).select(
-            F.col(id_in).alias(id_out), F.col(vec_col).alias(v_out)
-        )
-
     if exact:
         # r15: ONE fused Arrow kernel instead of three (two per-side
-        # norm_fold_pandas kernels + the pair cosine). The kernel
-        # computes both norms next to the dot — bit-identical folds —
-        # and its ``ok`` flag reproduces the old per-side
-        # ``nrm IS NOT NULL AND nrm < inf`` finite-geometry exclusion
-        # exactly (NaN fold → NaN, Inf fold → +Inf, both excluded;
-        # legitimate zero-norm vectors stay and score NULL, the
-        # oracle's CASE). Poisoned rows now reach the join before the
-        # post-kernel filter drops them, but the EXCLUDED row set is
-        # identical, so the result is too. Three Python round-trips
-        # per run → one (guide §4.1).
+        # norm kernels + the pair cosine). The kernel computes both
+        # norms next to the dot — bit-identical folds — and its ``ok``
+        # flag is the finite-geometry scope (r13 non-finite components
+        # class): it reproduces the old per-side ``nrm IS NOT NULL AND
+        # nrm < inf`` exclusion exactly (NaN fold → NaN, Inf fold →
+        # +Inf, both excluded; legitimate zero-norm vectors stay and
+        # score NULL, the oracle's CASE). Poisoned rows now reach the
+        # join before the post-kernel filter drops them, but the
+        # EXCLUDED row set is identical, so the result is too. Three
+        # Python round-trips per run → one (guide §4.1).
         from .vectorized import pair_cosine_flags_pandas
+
+        def _side(df_, id_in, id_out, v_out):
+            return df_.where(F.col(vec_col).isNotNull()).select(
+                F.col(id_in).alias(id_out), F.col(vec_col).alias(v_out)
+            )
 
         _cosf = pair_cosine_flags_pandas()
         le = _side(left, left_id, "l_id", "l_v")
@@ -295,106 +305,48 @@ def knn_join(
             .where(F.col("__cf").getField("ok"))
             .withColumn("score", F.round(F.col("__cf").getField("score"), 6))
         )
-    elif tables == 1:
-        # single-table: Arrow matmul bucket (same bit order and — in
-        # practice — same signs as the SQL oracle's fold; see
-        # table_buckets_pandas) + multi-probe XOR flips on the
-        # materialized base bucket column. NOT the codegen sign fold:
-        # CollapseProject inlines a projected fold into every probe
-        # expression — planes×dim×(1+p+p(p-1)/2) expression nodes ran
-        # un-JIT'd (measured 13.7 s steady-state at sf0.1 for a
-        # 2 000-row corpus; Arrow bucket path: see bench)
-        from .vectorized import bucket_norm_pandas
-
-        dim = VEC.infer_dim(right, vec_col)
-        hp = _deterministic_planes(planes, dim)
-        bn = bucket_norm_pandas(hp, planes, tables=1)
-        r = (
-            _side(right, right_id, "r_id", "r_v")
-            .withColumn("__bn", bn(F.col("r_v")))
-            .select(
-                "r_id",
-                "r_v",
-                F.col("__bn").getField("nrm").alias("r_nrm"),
-                F.element_at(F.col("__bn").getField("bs"), 1).alias("__bucket"),
-            )
-        )
-        l = (
-            _side(left, left_id, "l_id", "l_v")
-            .withColumn("__bn", bn(F.col("l_v")))
-            .select(
-                "l_id",
-                "l_v",
-                F.col("__bn").getField("nrm").alias("l_nrm"),
-                F.element_at(F.col("__bn").getField("bs"), 1).alias("__b0"),
-            )
-        )
-        probes = [F.col("__b0")]
-        if probe_radius >= 1:
-            probes += [
-                F.col("__b0").bitwiseXOR(F.lit(1 << i)) for i in range(planes)
-            ]
-        if probe_radius >= 2:
-            probes += [
-                F.col("__b0").bitwiseXOR(F.lit((1 << i) | (1 << j)))
-                for i in range(planes)
-                for j in range(i)
-            ]
-        l = (
-            l.withColumn("__bucket", F.explode(F.array_distinct(F.array(*probes))))
-            .drop("__b0")
-        )
-        # equi-join on the bucket key: each right row lives in exactly
-        # one bucket and probe buckets are distinct, so a (l, r) pair
-        # matches at most once — no post-join dedup needed
-        scored = l.join(r, "__bucket").withColumn("score", score_expr)
     else:
-        # multi-table: L·p flat sign folds in one projection overflow
-        # the JIT method budget and run interpreted (measured 6×
-        # slower) — compute all table buckets in one Arrow matmul
-        from .vectorized import bucket_norm_pandas
+        # Bucketed: both sides through the fused Arrow bucket+norm
+        # kernel (``_bucket_norm_side``), the left side exploded over
+        # the multi-probe XOR flips of its materialized base bucket.
+        # NOT the codegen sign fold: CollapseProject inlines a
+        # projected fold into every probe expression —
+        # planes×dim×(1+p+p(p-1)/2) expression nodes ran un-JIT'd
+        # (measured 13.7 s steady-state at sf0.1 for a 2 000-row
+        # corpus), and with L tables the L·p flat sign folds overflow
+        # the JIT method budget (measured 6× slower). Norms are
+        # computed once per vector, not once per candidate pair —
+        # bit-identical score (see VEC.cosine_with_norms). Pair scoring
+        # runs in the Arrow kernel (the same left-fold doubles as the
+        # SQL oracles): candidate volume is pairs-per-bucket × probes,
+        # and the dim-unrolled codegen fold on that stage ran un-JIT'd
+        # (see pair_cosine_pandas).
+        from .vectorized import pair_cosine_pandas
 
-        dim = VEC.infer_dim(right, vec_col)
-        hp_all = _deterministic_planes(planes * tables, dim)
-        bn = bucket_norm_pandas(hp_all, planes, tables)
-        r = (
-            _side(right, right_id, "r_id", "r_v")
-            .withColumn("__bn", bn(F.col("r_v")))
-            .select(
-                "r_id",
-                "r_v",
-                F.col("__bn").getField("nrm").alias("r_nrm"),
-                F.explode(F.col("__bn").getField("bs")).alias("__bucket"),
-            )
+        hp = _deterministic_planes(planes * tables, VEC.infer_dim(right, vec_col))
+        r = _bucket_norm_side(
+            right, right_id, vec_col, ("r_id", "r_v", "r_nrm", "__bucket"),
+            hp, planes, tables,
         )
-        l = (
-            _side(left, left_id, "l_id", "l_v")
-            .withColumn("__bn", bn(F.col("l_v")))
-            .select(
-                "l_id",
-                "l_v",
-                F.col("__bn").getField("nrm").alias("l_nrm"),
-                F.explode(F.col("__bn").getField("bs")).alias("__tb"),
-            )
+        l = _bucket_norm_side(
+            left, left_id, vec_col, ("l_id", "l_v", "l_nrm", "__b0"),
+            hp, planes, tables,
         )
-        probes = [F.col("__tb")]
-        if probe_radius >= 1:
-            # flips touch bits < planes only, so the table tag survives
-            probes += [
-                F.col("__tb").bitwiseXOR(F.lit(1 << i)) for i in range(planes)
-            ]
-        if probe_radius >= 2:
-            probes += [
-                F.col("__tb").bitwiseXOR(F.lit((1 << i) | (1 << j)))
-                for i in range(planes)
-                for j in range(i)
-            ]
+        probes = _probe_buckets(F.col("__b0"), planes, probe_radius)
         l = l.withColumn(
             "__bucket", F.explode(F.array_distinct(F.array(*probes)))
-        ).drop("__tb")
-        # a pair can match in several tables → dedup before scoring
-        cand = l.join(r, "__bucket").dropDuplicates(["l_id", "r_id"])
-        scored = cand.withColumn("score", score_expr)
+        ).drop("__b0")
+        # each right row lives in one bucket per table and probe buckets
+        # are distinct, so with one table a (l, r) pair matches at most
+        # once; with several it can match in each → dedup before scoring
+        cand = l.join(r, "__bucket")
+        if tables > 1:
+            cand = cand.dropDuplicates(["l_id", "r_id"])
+        _cos = pair_cosine_pandas()
+        scored = cand.withColumn(
+            "score",
+            F.round(_cos(F.col("l_v"), F.col("r_v"), F.col("l_nrm"), F.col("r_nrm")), 6),
+        )
     w = W.partitionBy("l_id").orderBy(F.desc("score"), F.col("r_id"))
     return (
         # Explicit projection before the ranking window: the window
@@ -428,35 +380,15 @@ def build_ann_index(
 
     NULL vectors carry no geometry and are excluded (the r12
     NULL-embedding degrade contract — a NULL row would otherwise
-    poison the Arrow bucketer batch-wide)."""
-    from .vectorized import bucket_norm_pandas
-
+    poison the Arrow bucketer batch-wide), and so are corrupt vectors
+    (the side's NULL-bucket scope), so the persisted index never
+    carries them."""
     dim = VEC.infer_dim(corpus, vec_col)
-    hp = _deterministic_planes(planes, dim)
-    # r15: fused bucket+norm kernel — the norm used to be a
-    # dim-unrolled codegen fold projected next to the bucketer; the
-    # fused kernel computes it in the same Arrow pass (bit-identical
-    # left fold, see bucket_norm_pandas)
-    bn = bucket_norm_pandas(hp, planes, tables=1)
-    out = (
-        corpus.where(F.col(vec_col).isNotNull())
-        .select(
-            F.col(id_col).alias("r_id"),
-            F.col(vec_col).alias("r_v"),
-        )
-        .withColumn("__bn", bn(F.col("r_v")))
-        .select(
-            "r_id",
-            "r_v",
-            F.col("__bn").getField("nrm").alias("r_nrm"),
-            F.element_at(F.col("__bn").getField("bs"), 1).alias("bucket"),
-        )
-        # finite-geometry scope (r13): the masking kernel emits a
-        # NULL bucket for corrupt vectors — excluded here so the
-        # persisted index never carries them
-        .where(F.col("bucket").isNotNull())
+    out = _bucket_norm_side(
+        corpus, id_col, vec_col, ("r_id", "r_v", "r_nrm", "bucket"),
+        _deterministic_planes(planes, dim), planes, 1,
     )
-    # dim tag (r14, ab_r14_ledger attribution): consumers need the
+    # dim tag (r14; SCALE.md "Kernel-once contract"): consumers need the
     # index dimension for the drift contract, but infer_dim over THIS
     # plan can no longer prune the bucket column (the NULL-bucket
     # filter references it), so the one-row driver job would spin up
@@ -619,7 +551,7 @@ def incremental_knn(
     vectors BEFORE indexing (the probe measures both)."""
     from pyspark.sql import Window as W
 
-    from .vectorized import bucket_norm_pandas, pair_cosine_pandas
+    from .vectorized import pair_cosine_pandas
 
     dim = getattr(ann_index, "_sg_ann_dim", 0) or VEC.infer_dim(
         ann_index, "r_v"
@@ -641,38 +573,13 @@ def incremental_knn(
         # (append_to_ann_index) and this probe-side ranking is a no-op
         # on an already-capped index (the cap is idempotent)
         ann_index = _cap_buckets(ann_index, bucket_cap, k=k)
-    hp = _deterministic_planes(planes, dim)
-    # r15: fused bucket+norm kernel (see bucket_norm_pandas) — the
-    # batch norm rides the same Arrow pass as the bucket instead of a
-    # dim-unrolled codegen fold
-    bn = bucket_norm_pandas(hp, planes, tables=1)
-    l = (
-        new_batch.where(F.col(vec_col).isNotNull())
-        .select(
-            F.col(id_col).alias("l_id"),
-            F.col(vec_col).alias("l_v"),
-        )
-        .withColumn("__bn", bn(F.col("l_v")))
-        .select(
-            "l_id",
-            "l_v",
-            F.col("__bn").getField("nrm").alias("l_nrm"),
-            F.element_at(F.col("__bn").getField("bs"), 1).alias("__b0"),
-        )
-        # finite-geometry scope (r13): corrupt batch vectors carry a
-        # NULL base bucket from the masking kernel — dropped before
-        # the probe explode so they never shuffle
-        .where(F.col("__b0").isNotNull())
+    # corrupt batch vectors are dropped by the side's NULL-bucket
+    # scope before the probe explode, so they never shuffle
+    l = _bucket_norm_side(
+        new_batch, id_col, vec_col, ("l_id", "l_v", "l_nrm", "__b0"),
+        _deterministic_planes(planes, dim), planes, 1,
     )
-    probes = [F.col("__b0")]
-    if probe_radius >= 1:
-        probes += [F.col("__b0").bitwiseXOR(F.lit(1 << i)) for i in range(planes)]
-    if probe_radius >= 2:
-        probes += [
-            F.col("__b0").bitwiseXOR(F.lit((1 << i) | (1 << j)))
-            for i in range(planes)
-            for j in range(i)
-        ]
+    probes = _probe_buckets(F.col("__b0"), planes, probe_radius)
     l = l.withColumn(
         "bucket", F.explode(F.array_distinct(F.array(*probes)))
     ).drop("__b0")
@@ -691,30 +598,6 @@ def incremental_knn(
         .withColumn("__rn", F.row_number().over(w))
         .filter(F.col("__rn") <= k)
         .select("l_id", "r_id", "score")
-    )
-
-
-def knn_join_brute(
-    left: DataFrame,
-    right: DataFrame,
-    k: int = 3,
-    left_id: str = "vec_id",
-    right_id: str = "vec_id",
-    vec_col: str = "embedding",
-    broadcast: "bool | None" = None,
-) -> DataFrame:
-    """Exhaustive k-NN join (cross score). Kept as the explicit
-    bounded-side spelling of ``knn_join(exact=True)`` — use only when
-    one side is a bounded query batch."""
-    return knn_join(
-        left,
-        right,
-        k,
-        left_id,
-        right_id,
-        vec_col,
-        exact=True,
-        broadcast=broadcast,
     )
 
 

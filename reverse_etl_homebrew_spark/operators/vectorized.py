@@ -8,6 +8,30 @@ oracle). Past that, expression size grows linearly and JVM codegen
 falls back to interpretation — so the engine provides numpy-backed
 Pandas UDFs: one Arrow batch in, one matrix multiply out. ~10-100×
 over row-at-a-time Python, and dimension-independent plan size.
+
+Every kernel factory below is a thin pandas_udf over four shared
+primitives (the SNIPPETS.md [3] shape: one pandas core, thin
+factories):
+
+- input, LOUD: ``_vector_matrix`` — a NULL or ragged row raises. The
+  scoring kernels use it: their inputs were scoped upstream;
+- input, MASKING: ``_masked_matrix`` — corrupt rows are zeroed and
+  flagged. The bucket/cell/centroid kernels use it: their NULL output
+  IS the finite-geometry scope;
+- arithmetic: ``_fold``, the sequential per-dimension left fold (the
+  exact doubles of the codegen folds and of DuckDB's list_sum);
+- output: ``_null_where``, NULL on the masked rows.
+
+Kernel-once mark: every kernel whose output a consumer FILTERS is
+returned ``asNondeterministic()`` — deterministic in fact. Without the
+mark, PushDownPredicate substitutes the projected alias into a
+consumer's ``bucket IS NOT NULL`` / probe ``isin()`` / ``ok`` filter
+and plans a SECOND ArrowEvalPython, silently doubling every kernel
+evaluation (measured 1.34× on incremental-knn in round 14; SCALE.md
+"Kernel-once contract" records the interleaved A/B). The mark's only
+effect is disabling those moves: the filter stays ABOVE the
+projection and the kernel runs once (pinned per key in
+tests/test_incremental_knn.py::test_masking_kernels_run_once).
 """
 
 from __future__ import annotations
@@ -65,6 +89,97 @@ def _vector_matrix(vecs: "pd.Series", kernel: str):
         ) from exc
 
 
+def _masked_matrix(vecs: "pd.Series", dim: int):
+    """The MASKING input path: ``(m, finite)`` for a batch of
+    ``dim``-vectors. ``finite[i]`` is False for a corrupt row (NULL
+    vector, NULL/NaN/Inf component), and ``m`` holds that row zeroed,
+    so BLAS and the folds run over every row and ``_null_where`` NULLs
+    the masked ones. An empty batch is a ``(0, dim)`` matrix.
+
+    Why mask instead of raise (r13 vector-component poison): a masking
+    kernel's output is a Python-eval attribute barrier, so the
+    operators' ``bucket IS NOT NULL`` filter is the finite-geometry
+    scope in a form Catalyst can never push back into a duplicated
+    dim-term fold (an input-side fold filter measured 1.2-2.3× on the
+    bucketed keys; this is free). Scoring kernels keep the LOUD
+    contract — by the time pairs are scored the bucket filter has
+    already excluded every poisoned row."""
+    import numpy as np
+
+    if len(vecs) == 0:
+        return np.zeros((0, dim)), np.zeros(0, dtype=bool)
+    isnull = vecs.isna().to_numpy()
+    if isnull.any():
+        # whole-NULL vectors become NaN rows before tolist, so numpy
+        # never sees a ragged object row; None components arrive as NaN
+        vecs = vecs.copy()
+        vecs[isnull] = pd.Series(
+            [[float("nan")] * dim] * int(isnull.sum()), index=vecs.index[isnull]
+        )
+    m = np.asarray(vecs.tolist(), dtype=np.float64)
+    finite = np.isfinite(m).all(axis=1)
+    if not finite.all():
+        m = np.where(finite[:, None], m, 0.0)
+    return m, finite
+
+
+def _fold(a, b):
+    """Σᵢ aᵢ·bᵢ over the last axis as the SEQUENTIAL left fold
+    ``((a₀b₀ + a₁b₁) + a₂b₂) + …``, vectorized across every leading
+    (broadcast) axis. These are the exact doubles of the codegen folds
+    in functions/vectors.py and of DuckDB's list_sum, so the Arrow
+    speed path keeps the oracle bit-exact — a BLAS matmul reassociates
+    the sum and does not (a float32→float64 widening is exact and IEEE
+    sqrt is correctly rounded, so norms built on this fold match too)."""
+    acc = a[..., 0] * b[..., 0]
+    for i in range(1, a.shape[-1]):
+        acc = acc + a[..., i] * b[..., i]
+    return acc
+
+
+def _null_where(x, keep):
+    """One kernel output column: ``x`` (a value, or a row array, per
+    input row) as the Series the Arrow writer expects, NULL where
+    ``keep`` is False. Float columns carry NULL as NaN (the writer
+    masks ``isnull()`` cells); other columns get None cells, built per
+    row only when a row is masked. Nullable cells are built explicitly
+    (r14 advisor): assigning None into an int32 Series relies on a
+    silent dtype upcast — a FutureWarning in pandas 2.x and a
+    TypeError in 3.0."""
+    import numpy as np
+
+    if x.ndim == 1 and x.dtype.kind == "f":
+        return pd.Series(np.where(keep, x, np.nan))
+    if keep.all():
+        return pd.Series(list(x) if x.ndim == 2 else x)
+    return pd.Series(
+        [v if k else None for v, k in zip(x.tolist(), keep)], dtype="object"
+    )
+
+
+def _cosine(dot, den):
+    """``dot / den``, NULL where ``den`` is not > 0 — zero-norm rows
+    score NULL, the oracle's ``CASE WHEN den > 0``."""
+    import numpy as np
+
+    with np.errstate(divide="ignore", invalid="ignore"):
+        return _null_where(dot / den, den > 0)
+
+
+_SCORE_OK = T.StructType(
+    [
+        T.StructField("score", T.DoubleType()),
+        T.StructField("ok", T.BooleanType()),
+    ]
+)
+
+
+def _empty_score_ok() -> "pd.DataFrame":
+    return pd.DataFrame(
+        {"score": pd.Series([], dtype="float64"), "ok": pd.Series([], dtype="bool")}
+    )
+
+
 def cosine_scores_pandas(
     df: DataFrame,
     query: Sequence[float],
@@ -80,12 +195,10 @@ def cosine_scores_pandas(
 
     @F.pandas_udf(T.DoubleType())
     def score(vecs: pd.Series) -> pd.Series:
+        if len(vecs) == 0:
+            return pd.Series([], dtype="float64")
         m = _vector_matrix(vecs, "cosine_scores")
-        dots = m @ q
-        norms = np.sqrt((m * m).sum(axis=1)) * qn
-        with np.errstate(divide="ignore", invalid="ignore"):
-            out = np.where(norms > 0, dots / norms, np.nan)
-        return pd.Series(out)
+        return _cosine(m @ q, np.sqrt((m * m).sum(axis=1)) * qn)
 
     from ..functions import vectors as _VEC
 
@@ -129,43 +242,19 @@ def ivf_assign_pandas(
 
     At query time, scoring is restricted to the probe centroids'
     inverted lists — the scan-reduction analog of LSH bucketing with
-    better geometry for clustered data."""
+    better geometry for clustered data. Corrupt rows get a NULL cell
+    (the masking contract), which the cell filter below drops."""
     import numpy as np
 
     C = np.asarray([list(c) for c in centroids], dtype=np.float64)  # (k, d)
 
     @F.pandas_udf(T.IntegerType())
     def assign(vecs: pd.Series) -> pd.Series:
-        # r13: mask corrupt rows to a NULL cell (the bucketer idiom);
-        # callers' downstream cell filters exclude them for free
-        isnull = vecs.isna().to_numpy()
-        if isnull.any():
-            safe = vecs.copy()
-            safe[isnull] = pd.Series(
-                [[float("nan")] * C.shape[1]] * int(isnull.sum()),
-                index=safe.index[isnull],
-            )
-            m = np.asarray(safe.tolist(), dtype=np.float64)
-        else:
-            m = np.asarray(vecs.tolist(), dtype=np.float64)
-        finite = np.isfinite(m).all(axis=1)
-        if not finite.all():
-            m = np.where(finite[:, None], m, 0.0)
-        sims = m @ C.T  # (n, k)
-        argmax = sims.argmax(axis=1)
-        if finite.all():
-            return pd.Series(argmax.astype("int32"))
-        # nullable masking built explicitly (r14, advisor): assigning
-        # None into an int32 Series relies on a silent dtype upcast —
-        # a FutureWarning in pandas 2.x and a TypeError in 3.0
-        return pd.Series(
-            [int(c) if ok else None for c, ok in zip(argmax, finite)],
-            dtype="object",
-        )
+        m, finite = _masked_matrix(vecs, C.shape[1])
+        return _null_where((m @ C.T).argmax(axis=1).astype("int32"), finite)
 
-    # nondeterministic mark: see table_buckets_pandas — the cell
-    # filter below (and topk_ivf's probe isin) would otherwise re-plan
-    # the kernel a second time under the pushed-down predicate
+    # kernel-once mark (module docstring): the cell filter below and
+    # topk_ivf's probe isin would otherwise re-plan the kernel
     return df.select(
         F.col(id_col),
         F.col(vec_col),
@@ -198,33 +287,24 @@ def pair_cosine_pandas():
     """Scalar Pandas UDF scoring CANDIDATE PAIRS: cosine of two vector
     columns given their precomputed norms.
 
-    Accumulation is an explicit per-dimension left fold (vectorized
-    ACROSS pairs, sequential across dims), so every result is
-    bit-identical to the codegen flat fold in functions/vectors.dot
-    and to DuckDB's list_sum — the Arrow speed path keeps the oracle
-    exact. Exists because a filter over a projected dim-unrolled dot
-    re-evaluates the fold per reference (predicate + output) and blows
-    the JIT method budget — the candidate-scoring stage of the
-    LSH pair joins ran un-JIT'd (measured ~2 s per run on an 87k-pair
-    stage that numpy does in milliseconds). Zero/invalid norms yield
-    NULL, matching ``F.when(den > 0, ...)``."""
+    The dot is the ``_fold`` left fold (vectorized ACROSS pairs,
+    sequential across dims), so every result is bit-identical to the
+    codegen flat fold in functions/vectors.dot and to DuckDB's
+    list_sum — the Arrow speed path keeps the oracle exact. Exists
+    because a filter over a projected dim-unrolled dot re-evaluates
+    the fold per reference (predicate + output) and blows the JIT
+    method budget — the candidate-scoring stage of the LSH pair joins
+    ran un-JIT'd (measured ~2 s per run on an 87k-pair stage that
+    numpy does in milliseconds). Zero/invalid norms yield NULL,
+    matching ``F.when(den > 0, ...)``."""
     import numpy as np
 
     @F.pandas_udf(T.DoubleType())
     def cos(v: pd.Series, bv: pd.Series, n: pd.Series, bn: pd.Series) -> pd.Series:
         if len(v) == 0:
             return pd.Series([], dtype="float64")
-        A = _vector_matrix(v, "pair_cosine")
-        B = _vector_matrix(bv, "pair_cosine")
-        acc = A[:, 0] * B[:, 0]
-        for i in range(1, A.shape[1]):
-            acc = acc + A[:, i] * B[:, i]
-        den = n.to_numpy(dtype=np.float64) * bn.to_numpy(dtype=np.float64)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            out = acc / den
-        res = pd.Series(out)
-        res[den <= 0] = None
-        return res
+        dot = _fold(_vector_matrix(v, "pair_cosine"), _vector_matrix(bv, "pair_cosine"))
+        return _cosine(dot, n.to_numpy(dtype=np.float64) * bn.to_numpy(dtype=np.float64))
 
     return cos
 
@@ -234,8 +314,8 @@ def pair_cosine_flags_pandas():
     (r15 optimization round): computes BOTH vector norms inside the
     kernel and emits ``struct<score: double, ok: boolean>`` — ``ok``
     is the finite-geometry scope (both norms finite), evaluated where
-    the vectors already are instead of as two per-side
-    ``norm_fold_pandas`` kernels plus scalar filters.
+    the vectors already are instead of as two per-side norm kernels
+    plus scalar filters.
 
     Why: the exact branch paid THREE Python round-trips per query
     (left norm, right norm, pair cosine), each a fixed worker/Arrow
@@ -247,51 +327,31 @@ def pair_cosine_flags_pandas():
     cross, cross once).
 
     Bit-identical to the unfused spelling: the norm is the same
-    sequential left fold as ``norm_fold_pandas`` / the codegen
-    ``l2_norm`` (float32→float64 widening is exact, IEEE sqrt is
-    correctly rounded), the score is the same ``acc / (l_nrm*r_nrm)``
-    with NULL when the denominator is not > 0, and ``ok`` reproduces
-    the old per-side ``nrm IS NOT NULL AND nrm < inf`` filter: a
-    NaN-component fold is NaN, an Inf-component fold overflows to
-    +Inf — both legs non-finite, both excluded (the r14 advisor
-    contract), while legitimate zero-norm vectors stay (ok=true,
-    score NULL — the oracle's CASE)."""
+    ``_fold`` left fold as the codegen ``l2_norm``, the score is the
+    same ``acc / (l_nrm*r_nrm)`` with NULL when the denominator is not
+    > 0, and ``ok`` reproduces the old per-side ``nrm IS NOT NULL AND
+    nrm < inf`` filter: a NaN-component fold is NaN, an Inf-component
+    fold overflows to +Inf — both legs non-finite, both excluded (the
+    r14 advisor contract), while legitimate zero-norm vectors stay
+    (ok=true, score NULL — the oracle's CASE)."""
     import numpy as np
 
-    ret = T.StructType(
-        [
-            T.StructField("score", T.DoubleType()),
-            T.StructField("ok", T.BooleanType()),
-        ]
-    )
-
-    @F.pandas_udf(ret)
+    @F.pandas_udf(_SCORE_OK)
     def cosf(v: pd.Series, bv: pd.Series) -> pd.DataFrame:
         if len(v) == 0:
-            return pd.DataFrame({"score": pd.Series([], dtype="float64"),
-                                 "ok": pd.Series([], dtype="bool")})
+            return _empty_score_ok()
         A = _vector_matrix(v, "pair_cosine_flags")
         B = _vector_matrix(bv, "pair_cosine_flags")
-        la = A[:, 0] * A[:, 0]
-        lb = B[:, 0] * B[:, 0]
-        acc = A[:, 0] * B[:, 0]
-        for i in range(1, A.shape[1]):
-            la = la + A[:, i] * A[:, i]
-            lb = lb + B[:, i] * B[:, i]
-            acc = acc + A[:, i] * B[:, i]
-        ln = np.sqrt(la)
-        rn = np.sqrt(lb)
-        ok = np.isfinite(ln) & np.isfinite(rn)
-        den = ln * rn
-        with np.errstate(divide="ignore", invalid="ignore"):
-            out = acc / den
-        score = pd.Series(out)
-        score[~(den > 0)] = None
-        return pd.DataFrame({"score": score, "ok": pd.Series(ok)})
+        ln = np.sqrt(_fold(A, A))
+        rn = np.sqrt(_fold(B, B))
+        return pd.DataFrame(
+            {
+                "score": _cosine(_fold(A, B), ln * rn),
+                "ok": pd.Series(np.isfinite(ln) & np.isfinite(rn)),
+            }
+        )
 
-    # nondeterministic mark: see table_buckets_pandas — the exact knn
-    # branch filters on the ``ok`` field of this output, and predicate
-    # pushdown would otherwise re-plan the kernel below the filter
+    # kernel-once mark: the exact knn branch filters on ``ok``
     return cosf.asNondeterministic()
 
 
@@ -299,81 +359,31 @@ def query_cosine_flags_pandas(query):
     """Fused literal-query cosine for the UN-scoped brute branch (r15):
     one Arrow pass emitting ``struct<score: double, ok: boolean>`` —
     the dot against the fixed query vector AND the row norm computed
-    as the same sequential left folds as ``dot_literal`` /
-    ``l2_norm`` (bit-identical doubles), with ``ok`` the
-    finite-geometry scope on the norm (NaN fold → NaN, Inf fold →
-    +Inf, both excluded; finite zero-norm rows stay and score NULL —
-    the oracle's CASE). Replaces norm_fold_pandas + a 64-term codegen
-    dot in topk_brute's cosine path: same kernel count, one fewer
-    per-element JVM pass, and the dim-unrolled expression tree leaves
-    the plan."""
-    import math
-
+    as the same ``_fold`` left folds as ``dot_literal`` / ``l2_norm``
+    (bit-identical doubles), with ``ok`` the finite-geometry scope on
+    the norm (NaN fold → NaN, Inf fold → +Inf, both excluded; finite
+    zero-norm rows stay and score NULL — the oracle's CASE). Replaced
+    a norm kernel + a 64-term codegen dot in topk_brute's cosine path:
+    same kernel count, one fewer per-element JVM pass, and the
+    dim-unrolled expression tree leaves the plan."""
     import numpy as np
 
     q = np.asarray([float(x) for x in query], dtype=np.float64)
     # qn as the strict left fold (matches VEC._py_dot + math.sqrt)
-    acc = 0.0
-    for x in query:
-        acc += float(x) * float(x)
-    qn = math.sqrt(acc)
-    ret = T.StructType(
-        [
-            T.StructField("score", T.DoubleType()),
-            T.StructField("ok", T.BooleanType()),
-        ]
-    )
+    qn = float(np.sqrt(_fold(q, q)))
 
-    @F.pandas_udf(ret)
+    @F.pandas_udf(_SCORE_OK)
     def qcos(v: pd.Series) -> pd.DataFrame:
         if len(v) == 0:
-            return pd.DataFrame({"score": pd.Series([], dtype="float64"),
-                                 "ok": pd.Series([], dtype="bool")})
+            return _empty_score_ok()
         A = _vector_matrix(v, "query_cosine_flags")
-        nrm_acc = A[:, 0] * A[:, 0]
-        dot = A[:, 0] * q[0]
-        for i in range(1, A.shape[1]):
-            nrm_acc = nrm_acc + A[:, i] * A[:, i]
-            dot = dot + A[:, i] * q[i]
-        nrm = np.sqrt(nrm_acc)
-        ok = np.isfinite(nrm)
-        den = nrm * qn
-        with np.errstate(divide="ignore", invalid="ignore"):
-            out = dot / den
-        score = pd.Series(out)
-        score[~(den > 0)] = None
-        return pd.DataFrame({"score": score, "ok": pd.Series(ok)})
+        nrm = np.sqrt(_fold(A, A))
+        return pd.DataFrame(
+            {"score": _cosine(_fold(A, q), nrm * qn), "ok": pd.Series(np.isfinite(nrm))}
+        )
 
-    # nondeterministic mark: the caller filters on ``ok`` — see
-    # table_buckets_pandas
+    # kernel-once mark: the caller filters on ``ok``
     return qcos.asNondeterministic()
-
-
-def norm_fold_pandas():
-    """Scalar Pandas UDF: per-row L2 norm as the SAME sequential
-    left fold as functions/vectors.l2_norm (bit-identical doubles —
-    the pair_cosine precedent). Exists for the exact knn branch's
-    finite-geometry scope: a poisoned vector's fold is NaN, and the
-    Arrow boundary maps NaN → NULL, so `norm IS NOT NULL` on this
-    kernel's output is a pushdown-proof exclusion that still keeps
-    legitimate zero-norm vectors (norm 0.0, finite — their pairs
-    score NULL downstream exactly like the oracle's CASE)."""
-    import numpy as np
-
-    @F.pandas_udf(T.DoubleType())
-    def nrm(v: pd.Series) -> pd.Series:
-        if len(v) == 0:
-            return pd.Series([], dtype="float64")
-        A = _vector_matrix(v, "norm_fold")
-        acc = A[:, 0] * A[:, 0]
-        for i in range(1, A.shape[1]):
-            acc = acc + A[:, i] * A[:, i]
-        return pd.Series(np.sqrt(acc))
-
-    # nondeterministic mark: see table_buckets_pandas — the exact knn
-    # branch filters `nrm IS NOT NULL AND < inf` on this output, and
-    # predicate pushdown would otherwise run the fold twice per side
-    return nrm.asNondeterministic()
 
 
 def centroid_dists_pandas(centroid_vectors):
@@ -381,184 +391,67 @@ def centroid_dists_pandas(centroid_vectors):
     vector to each of K centroids as ``array<double>`` (centroid
     order = input order).
 
-    Accumulation is an explicit per-dimension left fold (vectorized
-    across rows), so each distance is bit-identical to the flat
-    codegen ``(a_i - c_i)²`` fold and to DuckDB's list_sum — rounding
-    and argmin stay JVM-side on the tiny output array, keeping the
-    oracle arithmetic entirely out of numpy's rounding semantics.
-    Exists because K unrolled distance expressions in one projection
-    (K·dim·2 terms) cost tens of seconds of janino compile per query
-    (measured 28 s for K=8, dim=64 — plan-size disease, not data
-    cost)."""
+    Each distance is the ``_fold`` left fold of ``(a_i - c_i)²``, so
+    it is bit-identical to the flat codegen fold and to DuckDB's
+    list_sum — rounding and argmin stay JVM-side on the tiny output
+    array, keeping the oracle arithmetic entirely out of numpy's
+    rounding semantics. Exists because K unrolled distance expressions
+    in one projection (K·dim·2 terms) cost tens of seconds of janino
+    compile per query (measured 28 s for K=8, dim=64 — plan-size
+    disease, not data cost).
+
+    Corrupt rows (NULL vector, NULL/NaN/Inf component) get a NULL
+    distance list — the bucketer's masking contract. The kmeans
+    callers filter ``dists IS NOT NULL`` on this output; an input-side
+    fold filter referenced across the iterate plan's three consumers
+    re-inlined the 64-term fold everywhere and measured 7× (the
+    janino/pushdown class)."""
     import numpy as np
 
     C = np.asarray([list(v) for v in centroid_vectors], dtype=np.float64)
 
     @F.pandas_udf(T.ArrayType(T.DoubleType()))
     def dists(vecs: pd.Series) -> pd.Series:
-        if len(vecs) == 0:
-            return pd.Series([], dtype="object")
-        # r13 vector-component poison: MASK corrupt rows (NULL vector,
-        # NULL/NaN/Inf component) to a NULL distance list — the same
-        # attribute-barrier exclusion as the bucketer. The kmeans
-        # callers filter `dists IS NOT NULL` on this output; an
-        # input-side fold filter referenced across the iterate plan's
-        # three consumers re-inlined the 64-term fold everywhere and
-        # measured 7× (the janino/pushdown class).
-        isnull = vecs.isna().to_numpy()
-        if isnull.any():
-            safe = vecs.copy()
-            dim = C.shape[1]
-            safe[isnull] = pd.Series(
-                [[float("nan")] * dim] * int(isnull.sum()),
-                index=safe.index[isnull],
-            )
-            A = np.asarray(safe.tolist(), dtype=np.float64)
-        else:
-            A = np.asarray(vecs.tolist(), dtype=np.float64)
-        finite = np.isfinite(A).all(axis=1)
-        if not finite.all():
-            A = np.where(finite[:, None], A, 0.0)
-        cols = []
-        for j in range(C.shape[0]):
-            d0 = A[:, 0] - C[j, 0]
-            acc = d0 * d0
-            for i in range(1, A.shape[1]):
-                di = A[:, i] - C[j, i]
-                acc = acc + di * di
-            cols.append(acc)
-        M = np.stack(cols, axis=1)
-        if finite.all():
-            return pd.Series(list(M))
-        return pd.Series([row if ok else None for row, ok in zip(M, finite)])
+        A, finite = _masked_matrix(vecs, C.shape[1])
+        M = np.stack([_fold(d, d) for d in (A - c for c in C)], axis=1)
+        return _null_where(M, finite)
 
-    # nondeterministic mark: see table_buckets_pandas — the kmeans
-    # assigners filter `dists IS NOT NULL` on this output, and
-    # predicate pushdown would otherwise run the K-centroid kernel
-    # twice per assignment pass
+    # kernel-once mark: the kmeans assigners filter `dists IS NOT NULL`
     return dists.asNondeterministic()
 
 
-def table_buckets_pandas(planes_flat, planes_per_table: int, tables: int):
-    """Pandas UDF computing all L hash-table bucket ids of a vector in
-    ONE Arrow-batched matmul — returns array<long> of length
-    ``tables``, each entry tagged with ``t * 2**planes_per_table``.
-
-    Bit order matches functions/vectors.random_hyperplane_signs (first
-    plane = MSB). This is the multi-table scale path: L×p flat
-    sign-fold expressions in one projection blow past the JVM's
-    generated-method JIT budget and run interpreted (measured 6×
-    slower than the numpy kernel over the same planes), while the
-    Arrow batch keeps plan size independent of L and p.
-
-    Bucket SIGNS are guaranteed bit-identical to the oracle's
-    left-to-right sign fold by construction, at matmul speed: BLAS
-    reassociates the summation, so a projection within accumulation
-    error of zero could flip a sign versus the fold (a pure-fold
-    kernel is 70-130x slower per batch — measured). The hybrid
-    computes the BLAS projection PLUS a rigorous summation-order error
-    bound (any two orders of summing d products differ by at most
-    ~2·d·u·Σ|vᵢpᵢ|; 8·d·u used for margin), and recomputes the exact
-    scalar left fold ONLY for entries whose |projection| falls inside
-    the bound — everywhere else sign(matmul) == sign(fold) is
-    mathematically guaranteed, and inside the bound the fold's own
-    value decides. Equality to the codegen fold is also pinned
-    empirically (test_arrow_bucketer_matches_codegen_sign_fold, plus a
-    forced-cancellation unit test)."""
-    import numpy as np
-
-    P = np.asarray([list(p) for p in planes_flat], dtype=np.float64)  # (L*p, d)
-    weights = (
-        np.left_shift(
-            np.int64(1), np.arange(planes_per_table - 1, -1, -1, dtype=np.int64)
-        )
-    )
-    tags = np.arange(tables, dtype=np.int64) << planes_per_table
-
-    @F.pandas_udf(T.ArrayType(T.LongType()))
-    def buckets(vecs: pd.Series) -> pd.Series:
-        import numpy as np
-
-        # r13 vector-component poison: the bucketer MASKS corrupt rows
-        # (NULL vector, NULL/NaN/Inf component) to a NULL bucket list
-        # instead of raising — its output is a Python-eval attribute
-        # barrier, so the operators' `bucket IS NOT NULL` filter is
-        # the finite-geometry scope in a form Catalyst can never push
-        # back into a duplicated 64-term fold (an input-side fold
-        # filter measured 1.2-2.3× on the bucketed keys; this is
-        # free). None components arrive as NaN via asarray; whole-NULL
-        # vectors are masked before tolist so numpy never sees a
-        # ragged object row. Scoring kernels (_vector_matrix callers)
-        # keep the LOUD contract — by the time pairs are scored the
-        # bucket filter has already excluded every poisoned row.
-        isnull = vecs.isna().to_numpy()
-        if isnull.any():
-            dim = P.shape[1]
-            safe = vecs.copy()
-            safe[isnull] = pd.Series([[float("nan")] * dim] * int(isnull.sum()),
-                                     index=safe.index[isnull])
-            m = np.asarray(safe.tolist(), dtype=np.float64)
-        else:
-            m = np.asarray(vecs.tolist(), dtype=np.float64)
-        finite = np.isfinite(m).all(axis=1)
-        if finite.all():
-            # fast path (clean batches — the overwhelmingly common
-            # case): one isfinite pass, no copies, no per-row python
-            signs = hybrid_fold_signs(m, P)
-            bs = signs.reshape(len(m), tables, planes_per_table).astype(np.int64) @ weights
-            return pd.Series(list(bs + tags))
-        # compute buckets on a zeroed copy (values irrelevant — masked
-        # rows emit NULL) to keep BLAS happy
-        m = np.where(finite[:, None], m, 0.0)
-        signs = hybrid_fold_signs(m, P)  # (n, L*p)
-        bs = signs.reshape(len(m), tables, planes_per_table).astype(np.int64) @ weights
-        bs = bs + tags  # (n, L)
-        out = [row if ok else None for row, ok in zip(bs, finite)]
-        return pd.Series(out)
-
-    # r14 (ab_r14_ledger attribution): deterministic in FACT, marked
-    # nondeterministic so the optimizer cannot re-inline the kernel
-    # into its consumers' filters — PushDownPredicate substitutes the
-    # projected alias into a `bucket IS NOT NULL` / probe `isin()`
-    # filter and plans a SECOND ArrowEvalPython, silently doubling
-    # every kernel evaluation (measured 1.34× on incremental-knn; the
-    # r13 "attribute barrier" claim held for Project collapse but not
-    # for filter pushdown). The annotation's only effect is disabling
-    # those moves: the filter stays ABOVE the projection and the
-    # kernel runs once.
-    return buckets.asNondeterministic()
-
-
 def bucket_norm_pandas(planes_flat, planes_per_table: int, tables: int):
-    """Fused bucketer + per-vector L2 norm (r15 optimization round):
-    one Arrow pass emitting ``struct<bs: array<long>, nrm: double>``
-    — the same bucket ids as ``table_buckets_pandas`` (same hybrid
-    sign-fold guarantee, same masking: corrupt rows get NULL fields)
-    plus the same norm double as the codegen ``l2_norm`` fold
-    (sequential left fold, float32→float64 exact, IEEE sqrt).
+    """Fused LSH bucketer + per-vector L2 norm: one Arrow pass emitting
+    ``struct<bs: array<long>, nrm: double>``. ``bs`` holds all L hash
+    table bucket ids of the vector (length ``tables``, entry t tagged
+    with ``t * 2**planes_per_table``; first plane = MSB, the bit order
+    of functions/vectors.random_hyperplane_signs). ``nrm`` is the
+    ``_fold`` norm — the same double as the codegen ``l2_norm``.
+    Corrupt rows (the ``_masked_matrix`` contract) get NULL ``bs`` AND
+    NULL ``nrm``: consumers' bucket filters exclude them before
+    anything shuffles, and the NULL nrm can never reach a score.
 
-    Why fused: every bucketed vector path (knn_join, build_ann_index,
-    incremental_knn, embedding_near_dup_pairs) projected the norm as
-    a dim-unrolled codegen fold NEXT TO the bucketer kernel — the
+    Why Arrow: L×p flat sign-fold expressions in one projection blow
+    past the JVM's generated-method JIT budget and run interpreted
+    (measured 6× slower than this kernel over the same planes), while
+    the Arrow batch keeps plan size independent of L and p. Why fused
+    (r15): every bucketed vector path (knn_join, build_ann_index,
+    incremental_knn, embedding_near_dup_pairs) used to project the
+    norm as a dim-unrolled codegen fold NEXT TO the bucketer — the
     vectors cross the Python boundary for the buckets anyway, so the
-    norm there is one extra vectorized fold over bytes already in
+    norm here is one extra vectorized fold over bytes already in
     cache, while the codegen spelling re-built a 64-term expression
-    tree per side per query (driver analysis/optimizer time scales
-    with it — the plan text was dominated by two such folds) and a
-    second full pass over the array elements in the JVM. The fold
-    arithmetic is bit-identical, so scores are unchanged.
+    tree per side per query and paid a second element-wise JVM pass.
 
-    Masking contract is table_buckets_pandas's, verbatim: NULL
-    vector / NULL / NaN / Inf component ⇒ NULL ``bs`` AND NULL
-    ``nrm`` — consumers' bucket filters exclude those rows before
-    anything shuffles, and the NULL nrm can never reach a score."""
+    Bucket SIGNS are bit-identical to the oracle's left-to-right sign
+    fold by construction, at matmul speed (``hybrid_fold_signs``).
+    Pinned empirically too (test_arrow_bucketer_matches_codegen_sign_fold,
+    plus a forced-cancellation unit test)."""
     import numpy as np
 
     P = np.asarray([list(p) for p in planes_flat], dtype=np.float64)  # (L*p, d)
-    weights = (
-        np.left_shift(
-            np.int64(1), np.arange(planes_per_table - 1, -1, -1, dtype=np.int64)
-        )
+    weights = np.left_shift(
+        np.int64(1), np.arange(planes_per_table - 1, -1, -1, dtype=np.int64)
     )
     tags = np.arange(tables, dtype=np.int64) << planes_per_table
     ret = T.StructType(
@@ -570,46 +463,17 @@ def bucket_norm_pandas(planes_flat, planes_per_table: int, tables: int):
 
     @F.pandas_udf(ret)
     def bucket_norm(vecs: pd.Series) -> pd.DataFrame:
-        import numpy as np
-
-        isnull = vecs.isna().to_numpy()
-        if isnull.any():
-            dim = P.shape[1]
-            safe = vecs.copy()
-            safe[isnull] = pd.Series([[float("nan")] * dim] * int(isnull.sum()),
-                                     index=safe.index[isnull])
-            m = np.asarray(safe.tolist(), dtype=np.float64)
-        else:
-            m = np.asarray(vecs.tolist(), dtype=np.float64)
-        finite = np.isfinite(m).all(axis=1)
-        if not finite.all():
-            m = np.where(finite[:, None], m, 0.0)
-        # exact left-fold self-dot (same doubles as l2_norm / the SQL
-        # oracle's list_sum fold), then IEEE sqrt
-        acc = m[:, 0] * m[:, 0]
-        for i in range(1, m.shape[1]):
-            acc = acc + m[:, i] * m[:, i]
-        nrm = np.sqrt(acc)
-        signs = hybrid_fold_signs(m, P)
+        m, finite = _masked_matrix(vecs, P.shape[1])
+        signs = hybrid_fold_signs(m, P)  # (n, L*p)
         bs = signs.reshape(len(m), tables, planes_per_table).astype(np.int64) @ weights
-        bs = bs + tags
-        if finite.all():
-            return pd.DataFrame(
-                {"bs": pd.Series(list(bs)), "nrm": pd.Series(nrm)}
-            )
         return pd.DataFrame(
             {
-                "bs": pd.Series(
-                    [row if ok else None for row, ok in zip(bs, finite)]
-                ),
-                "nrm": pd.Series(
-                    [float(x) if ok else None for x, ok in zip(nrm, finite)]
-                ),
+                "bs": _null_where(bs + tags, finite),
+                "nrm": _null_where(np.sqrt(_fold(m, m)), finite),
             }
         )
 
-    # nondeterministic mark: see table_buckets_pandas (filter pushdown
-    # would re-plan the kernel below its consumers' bucket filters)
+    # kernel-once mark: consumers filter the bucket (IS NOT NULL, isin)
     return bucket_norm.asNondeterministic()
 
 
@@ -628,7 +492,8 @@ def hybrid_fold_signs(m, P):
     error, u = 2⁻⁵³; 8·d·u used for margin) — so wherever |matmul
     projection| exceeds that bound its sign equals the fold's sign
     mathematically, and inside the bound the kernel RECOMPUTES the
-    exact fold and lets its value decide."""
+    exact fold and lets its value decide (a pure-fold kernel is
+    70-130× slower per batch — measured)."""
     import numpy as np
 
     m = np.ascontiguousarray(m, dtype=np.float64)
@@ -637,15 +502,11 @@ def hybrid_fold_signs(m, P):
     bound = (np.abs(m) @ np.abs(P.T)) * (8.0 * m.shape[1] * 2.0**-53)
     risky_rows = (np.abs(proj) <= bound).any(axis=1)
     if risky_rows.any():
-        # exact per-dimension left fold for the rows holding risky
-        # entries, VECTORIZED across those rows and all planes —
-        # degenerate inputs (all-zero/padding embeddings make every
-        # entry risky) must not fall onto a per-entry Python loop
-        mr = m[risky_rows]
-        acc = mr[:, 0:1] * P[None, :, 0].reshape(1, -1)
-        for i in range(1, mr.shape[1]):
-            acc = acc + mr[:, i : i + 1] * P[None, :, i].reshape(1, -1)
-        proj[risky_rows] = acc
+        # exact left fold for the rows holding risky entries,
+        # VECTORIZED across those rows and all planes — degenerate
+        # inputs (all-zero/padding embeddings make every entry risky)
+        # must not fall onto a per-entry Python loop
+        proj[risky_rows] = _fold(m[risky_rows][:, None, :], P[None, :, :])
     return proj >= 0
 
 

@@ -196,6 +196,12 @@ def test_arrow_batches_byte_bounded(spark):
 
 
 def test_cluster_conf_ships_byte_bounded_arrow():
+    """The shipped cap is 256 MB (session.py: raised from 64 MB for
+    the refresh composite). That is the worst case per task per
+    Pandas-UDF batch: a run of giant rows can put up to 256 MB of
+    Arrow input in front of ONE kernel call, times the concurrent
+    tasks per executor. An executor-memory downsize must re-evaluate
+    the cap against that bound."""
     from reverse_etl_homebrew_spark.session import cluster_conf
 
     conf = cluster_conf()

@@ -349,11 +349,12 @@ def test_bucket_cap_append_equals_rebuild_under_cap(spark):
 
 
 def test_masking_kernels_run_once(spark):
-    """Regression pin for the r14 kernel-duplication class
-    (fixtures/ab_r14_ledger.py attribution): a consumer filter on a
-    masking kernel's output column (`bucket IS NOT NULL`, probe
-    `isin`, `nrm < inf`, `dists IS NOT NULL`) used to be pushed below
-    the projection by PushDownPredicate, re-inlining the Python UDF
+    """Regression pin for the r14 kernel-duplication class (its
+    attribution is recorded in SCALE.md, "Kernel-once contract"): a
+    consumer filter on a masking kernel's output column
+    (`bucket IS NOT NULL`, probe `isin`, `nrm < inf`,
+    `dists IS NOT NULL`) used to be pushed below the projection by
+    PushDownPredicate, re-inlining the Python UDF
     and planning a SECOND ArrowEvalPython — every kernel evaluation
     silently ran twice (measured 1.34x on incremental-knn). The
     kernels are now marked nondeterministic (deterministic in fact —
@@ -379,6 +380,25 @@ def test_masking_kernels_run_once(spark):
         # RDD scan, leaving the pair-cosine + one visible kernel node
         "similarity-join": 2,
         "embedding-near-dup": 2,
+        # Every other registered key that calls a vectorized kernel,
+        # pinned at the counts its plans carried before the kernel
+        # bodies were folded onto shared primitives (one masking input
+        # path, one left fold), so that consolidation could neither add
+        # nor drop an ArrowEvalPython pass:
+        # 1 fused bucket+norm kernel; the probe isin stays above it
+        "topk-similarity-lsh": 1,
+        # 1 IVF cell kernel under the cell filter + probe isin
+        "topk-similarity-ivf": 1,
+        # 1 cosine scorer (cosine_scores_pandas)
+        "topk-similarity-pandas": 1,
+        # 1 fused literal-query cosine (query_cosine_flags_pandas)
+        "hybrid-rrf": 1,
+        # 2 multi-table bucket+norm kernels + 1 pair-cosine
+        "knn-join-tables": 3,
+        # 1 centroid-distance kernel
+        "kmeans-iterate": 1,
+        # build_ann_index + incremental_knn: 2 bucket+norm + 1 pair-cosine
+        "corpus-refresh-pipeline": 3,
     }
     for key, want in expected.items():
         df = Q.QUERIES[key](spark, SF)

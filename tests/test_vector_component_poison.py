@@ -207,20 +207,21 @@ def test_finite_geometry_matches_sql_twin_on_poison(spark):
 def test_bucketer_masks_poison_to_null_bucket(spark):
     """The masking bucketer IS the finite-geometry scope for every
     bucketed operator: corrupt vectors (NaN/Inf/NULL component, whole
-    NULL) get a NULL bucket — which no equi-join or isin() can match
-    — while clean rows bucket normally. (A first-draft batch-wide
-    loud kernel guard + input-side fold filters measured 1.2-2.3× on
-    the hot similarity keys; the mask is an attribute barrier
-    Catalyst cannot push back into a duplicated fold.)"""
+    NULL) get a NULL bucket list AND a NULL norm — which no equi-join
+    or isin() can match — while clean rows bucket normally. (A
+    first-draft batch-wide loud kernel guard + input-side fold filters
+    measured 1.2-2.3× on the hot similarity keys; the mask is an
+    attribute barrier Catalyst cannot push back into a duplicated
+    fold.)"""
     from reverse_etl_homebrew_spark.operators.dedup import (
         _deterministic_planes,
     )
     from reverse_etl_homebrew_spark.operators.vectorized import (
-        table_buckets_pandas,
+        bucket_norm_pandas,
     )
 
     hp = _deterministic_planes(4, 3)
-    b = table_buckets_pandas(hp, 4, tables=1)
+    bn = bucket_norm_pandas(hp, 4, tables=1)
     rows = [
         (1, [1.0, 2.0, 3.0]),
         (2, [float("nan"), 1.0, 1.0]),
@@ -230,25 +231,37 @@ def test_bucketer_masks_poison_to_null_bucket(spark):
     ]
     df = spark.createDataFrame(rows, "id int, v array<double>")
     got = {
-        r["id"]: r["bk"]
-        for r in df.select(
-            "id", F.element_at(b(F.col("v")), 1).alias("bk")
-        ).collect()
+        r["id"]: (r["bk"], r["nrm"])
+        for r in df.select("id", bn(F.col("v")).alias("bn"))
+        .select(
+            "id",
+            F.element_at(F.col("bn").getField("bs"), 1).alias("bk"),
+            F.col("bn").getField("nrm").alias("nrm"),
+        )
+        .collect()
     }
-    assert got[1] is not None
-    assert got[2] is None and got[3] is None and got[4] is None
-    assert got[5] is None
+    assert got[1][0] is not None and got[1][1] == math.sqrt(14.0)
+    for i in (2, 3, 4, 5):
+        assert got[i] == (None, None), i
 
 
 def test_exact_branch_norm_kernel_distinguishes_poison_from_zero(spark):
-    """The exact knn branch's fold-exact norm kernel: poisoned
-    vectors → NULL norm (excluded), zero vectors → 0.0 (kept — their
-    pairs legitimately score NULL like the oracle's CASE)."""
+    """The norm folds inside the kernels: poisoned vectors are
+    excluded, zero vectors are kept (their pairs legitimately score
+    NULL like the oracle's CASE). The exact knn branch's fused pair
+    kernel flags poison with ok=false and keeps a zero vector (ok=true,
+    score NULL); the bucketed branches' bucket+norm kernel gives poison
+    a NULL norm and a zero vector the norm 0.0."""
+    from reverse_etl_homebrew_spark.operators.dedup import (
+        _deterministic_planes,
+    )
     from reverse_etl_homebrew_spark.operators.vectorized import (
-        norm_fold_pandas,
+        bucket_norm_pandas,
+        pair_cosine_flags_pandas,
     )
 
-    nrm = norm_fold_pandas()
+    cosf = pair_cosine_flags_pandas()
+    bn = bucket_norm_pandas(_deterministic_planes(4, 2), 4, tables=1)
     rows = [
         (1, [3.0, 4.0]),
         (2, [0.0, 0.0]),
@@ -256,10 +269,16 @@ def test_exact_branch_norm_kernel_distinguishes_poison_from_zero(spark):
         (4, [None, 1.0]),
     ]
     df = spark.createDataFrame(rows, "id int, v array<double>")
-    got = {r["id"]: r["n"] for r in df.select("id", nrm("v").alias("n")).collect()}
-    assert got[1] == 5.0
-    assert got[2] == 0.0
-    assert got[3] is None and got[4] is None
+    got = {
+        r["id"]: (r["cf"]["ok"], r["cf"]["score"], r["bn"]["nrm"])
+        for r in df.select(
+            "id", cosf("v", "v").alias("cf"), bn("v").alias("bn")
+        ).collect()
+    }
+    assert got[1] == (True, 1.0, 5.0)
+    assert got[2] == (True, None, 0.0)
+    assert got[3] == (False, None, None)
+    assert got[4] == (False, None, None)
 
 
 def test_query_vector_degrades_on_nonfinite_seed(spark):
@@ -272,3 +291,124 @@ def test_query_vector_degrades_on_nonfinite_seed(spark):
     assert all(x == 0.0 for x in vec)
     vec1, found1 = VEC.query_vector(df, vec_id=1)
     assert found1 and math.isfinite(sum(vec1))
+
+
+# ---------------------------------------------------------------------------
+# Every Arrow vector kernel on an empty batch and on a masked-row batch,
+# called directly (no Spark job): the batch shapes an operator boundary
+# cannot rule out.
+# ---------------------------------------------------------------------------
+
+_DIM = 3
+
+
+def _kernel_fn(monkeypatch, build):
+    """The pandas function of the one pandas_udf that ``build()``
+    creates. Capturing at creation reaches the kernels that operators
+    build inline (cosine_scores_pandas, ivf_assign_pandas) the same way
+    as the kernel factories."""
+    made = []
+    real = F.pandas_udf
+
+    def spy(*args, **kwargs):
+        decorate = real(*args, **kwargs)
+
+        def wrap(fn):
+            made.append(fn)
+            return decorate(fn)
+
+        return wrap
+
+    monkeypatch.setattr(F, "pandas_udf", spy)
+    build()
+    monkeypatch.undo()
+    assert len(made) == 1
+    return made[0]
+
+
+def _kernels():
+    from reverse_etl_homebrew_spark.operators import vectorized as VZ
+    from reverse_etl_homebrew_spark.operators.dedup import _deterministic_planes
+
+    q = [1.0, 0.5, -2.0]
+    cents = [[1.0, 0.0, 0.0], [0.0, 1.0, 0.0]]
+    return {
+        # name: (build(df), vector args, extra norm args, masking?, empty dtypes)
+        "cosine_scores": (
+            lambda df: VZ.cosine_scores_pandas(df, q), 1, 0, False, "float64"
+        ),
+        "pair_cosine": (lambda df: VZ.pair_cosine_pandas(), 2, 2, False, "float64"),
+        "pair_cosine_flags": (
+            lambda df: VZ.pair_cosine_flags_pandas(), 2, 0, False,
+            {"score": "float64", "ok": "bool"},
+        ),
+        "query_cosine_flags": (
+            lambda df: VZ.query_cosine_flags_pandas(q), 1, 0, False,
+            {"score": "float64", "ok": "bool"},
+        ),
+        "centroid_dists": (
+            lambda df: VZ.centroid_dists_pandas(cents), 1, 0, True, "object"
+        ),
+        "bucket_norm": (
+            lambda df: VZ.bucket_norm_pandas(_deterministic_planes(6, _DIM), 3, 2),
+            1, 0, True, {"bs": "object", "nrm": "float64"},
+        ),
+        "ivf_assign": (
+            lambda df: VZ.ivf_assign_pandas(df, cents), 1, 0, True, "int32"
+        ),
+    }
+
+
+def _null(v) -> bool:
+    return v is None or (isinstance(v, float) and math.isnan(v))
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "cosine_scores", "pair_cosine", "pair_cosine_flags",
+        "query_cosine_flags", "centroid_dists", "bucket_norm", "ivf_assign",
+    ],
+)
+def test_kernel_empty_and_masked_batches(spark, monkeypatch, name):
+    """Empty batch → a typed empty result (never a numpy shape error).
+    A 3-row batch holding one NULL vector and one NaN-component vector
+    → masking kernels NULL every output field on exactly those two
+    rows; loud kernels raise the documented SchemaContractError on the
+    NULL row."""
+    import numpy as np
+    import pandas as pd
+
+    from reverse_etl_homebrew_spark.sources.catalog import SchemaContractError
+
+    build, n_vec, n_norm, masking, dtypes = _kernels()[name]
+    df = spark.createDataFrame(
+        [(0, [1.0, 2.0, 2.0])], "vec_id int, embedding array<double>"
+    )
+    fn = _kernel_fn(monkeypatch, lambda: build(df))
+
+    def call(vecs, norms):
+        return fn(*([vecs] * n_vec + [norms] * n_norm))
+
+    out = call(pd.Series([], dtype="object"), pd.Series([], dtype="float64"))
+    assert len(out) == 0
+    if isinstance(dtypes, dict):
+        assert {c: str(out[c].dtype) for c in out.columns} == dtypes
+    else:
+        assert str(out.dtype) == dtypes
+
+    mixed = pd.Series(
+        [np.array([1.0, 2.0, 2.0]), None, np.array([float("nan"), 1.0, 1.0])],
+        dtype="object",
+    )
+    norms = pd.Series([3.0, float("nan"), float("nan")])
+    if not masking:
+        with pytest.raises(SchemaContractError, match="NULL embedding"):
+            call(mixed, norms)
+        return
+    out = call(mixed, norms)
+    cols = [out[c] for c in out.columns] if isinstance(out, pd.DataFrame) else [out]
+    rows = list(zip(*cols))
+    assert len(rows) == 3
+    assert not any(_null(v) for v in rows[0]), rows[0]
+    assert all(_null(v) for v in rows[1] + rows[2]), rows[1:]
